@@ -69,11 +69,8 @@ object ScaleCheck {
       "build_vector_index_partitioned", "refresh_vector_index_partitioned")
       .exists(want)
     if (wantsBuilds) {
-      val root = Scratch.dir("graft_scalecheck_")
-      val cat = s"graftscale${math.abs(sfDir.hashCode) % 1000000}"
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-      spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.q")
+      val cat = "graftscale"
+      graft.sources.Fixtures.catalog(spark, cat)
       val docs = Tables(spark, sfDir, "documents")
         .select("doc_id", "source", "text")
       val emb = Tables(spark, sfDir, "embeddings")

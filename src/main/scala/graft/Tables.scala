@@ -45,23 +45,14 @@ object Tables {
     * the [[apply]] memo's class applied to the text/vector index
     * sidecars: every `spark.read.parquet` of a posts/stats/cents/codes
     * dir paid a footer schema-inference job PER QUERY INVOCATION). The
-    * key carries a per-file content token (name:length:mtime), so an
-    * in-place REFRESH that rewrites a sidecar re-reads instead of
-    * serving a stale plan; the listing itself is driver-side metadata
-    * the parquet reader would redo anyway. Lazy plan only — every
-    * action still scans the files. */
-  def sidecar(spark: SparkSession, path: String): DataFrame = {
-    val token = {
-      val f = new java.io.File(path)
-      val kids = f.listFiles()
-      if (kids == null) ""
-      else kids.sortBy(_.getName)
-        .map(k => s"${k.getName}:${k.length}:${k.lastModified}")
-        .mkString(",")
-    }
-    cache.computeIfAbsent((spark, s"sidecar|$path|$token"),
+    * key carries the directory's [[contentToken]], so an in-place
+    * REFRESH that rewrites a sidecar re-reads instead of serving a stale
+    * plan; the listing itself is driver-side metadata the parquet reader
+    * would redo anyway. Lazy plan only — every action still scans the
+    * files. */
+  def sidecar(spark: SparkSession, path: String): DataFrame =
+    cache.computeIfAbsent((spark, s"sidecar|$path|${contentToken(Seq(path))}"),
       _ => spark.read.parquet(path))
-  }
 
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
@@ -75,26 +66,48 @@ object Tables {
     * (path, content token) like [[sidecar]]. */
   def rowCount(dir: String, name: String): Long = {
     val root = new java.io.File(s"$dir/$name.parquet")
-    val files =
-      if (root.isDirectory)
-        root.listFiles().filter(f => f.getName.endsWith(".parquet"))
-          .sortBy(_.getName).toSeq
-      else Seq(root)
-    val token = files.map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .mkString(",")
-    countCache.computeIfAbsent(s"${root.getPath}|$token", _ => {
-      val conf = new org.apache.hadoop.conf.Configuration()
-      files.map { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.getPath), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
-    })
+    countCache.computeIfAbsent(
+      s"${root.getPath}|${contentToken(Seq(root.getPath))}", _ => {
+        val files =
+          if (root.isDirectory)
+            root.listFiles().filter(f => f.getName.endsWith(".parquet")).toSeq
+          else Seq(root)
+        val conf = new org.apache.hadoop.conf.Configuration()
+        files.map { f =>
+          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.getPath), conf)
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          try r.getRecordCount finally r.close()
+        }.sum
+      })
   }
 
   private val countCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
+  /** The "did these files change" token every per-JVM memo keys on: a
+    * 128-bit digest of the sorted (path, length, mtime) listing of every
+    * regular file under `paths` (directories walked recursively). A path
+    * that does not exist or cannot be listed — absent, or a non-local URI
+    * Spark reads through Hadoop FS — yields a fresh token that never
+    * matches, so nothing keyed on it is ever reused. The contract is
+    * (path, length, mtime), not bytes: a same-length rewrite within one
+    * mtime tick is not seen. */
+  def contentToken(paths: Seq[String]): String = {
+    val listing = new StringBuilder
+    def walk(f: java.io.File): Boolean =
+      if (f.isFile) {
+        listing ++= s"${f.getPath}:${f.length}:${f.lastModified}\n"
+        true
+      } else Option(f.listFiles()).exists(_.sortBy(_.getName).forall(walk))
+    if (paths.sorted.forall(p => walk(new java.io.File(p))))
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(listing.toString.getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString
+    else s"unlistable:${unlistable.incrementAndGet()}"
+  }
+
+  private val unlistable = new java.util.concurrent.atomic.AtomicLong()
 
   private def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events") {

@@ -293,29 +293,12 @@ object Text extends QueryModule {
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
        org.apache.spark.sql.DataFrame)]()
 
-  /** Digest of a table directory's (name, length, mtime) triples — the
-    * cheap "did the data change" version token for per-JVM model memos. */
-  private def tableVersionToken(d: String, table: String): String = {
-    val f = new java.io.File(s"$d/$table.parquet")
-    val entries =
-      if (f.isDirectory)
-        f.listFiles().sortBy(_.getName)
-          .map(x => s"${x.getName}:${x.length}:${x.lastModified}")
-      else Array(s"${f.getName}:${f.length}:${f.lastModified}")
-    // 128-bit digest of the full listing, not a 32-bit hash (r16 advice):
-    // a hashCode collision would silently serve a stale model for the
-    // JVM's lifetime.
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.digest(entries.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-  }
-
   private def nbModel(s: org.apache.spark.sql.SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
          org.apache.spark.sql.DataFrame) =
     nbModelCache.computeIfAbsent(
       s"${s.sparkContext.applicationId}_${d}_" +
-        tableVersionToken(d, "documents"), _ => {
+        Tables.contentToken(Seq(s"$d/documents.parquet")), _ => {
         val docs = Tables(s, d, "documents")
         val train = docs
           .select(col("doc_id"), col("lang"),

@@ -70,6 +70,10 @@ object MaterializedView {
         (r, r.table.asInstanceOf[ManifestTable])
     }
 
+  /** The absolute directory of a manifest-table relation. */
+  private def sourceDir(r: DataSourceV2Relation): String =
+    graft.sources.Fixtures.dir(r).get.toAbsolutePath.toString
+
   /** The ONE manifest-table relation of a plan, when the plan reads exactly
     * one (the legacy-props contract). */
   private def soleSource(plan: LogicalPlan): Option[(DataSourceV2Relation, ManifestTable)] =
@@ -126,8 +130,8 @@ object MaterializedView {
     }
     val surgered = plan.transform {
       case r: DataSourceV2Relation if targets.exists(_ eq r) &&
-          pins.contains(r.table.asInstanceOf[ManifestTable].dir.toAbsolutePath.toString) =>
-        val dirStr = r.table.asInstanceOf[ManifestTable].dir.toAbsolutePath.toString
+          pins.contains(sourceDir(r)) =>
+        val dirStr = sourceDir(r)
         pins(dirStr) match {
           case SnapPin(snapshot, files) =>
             val opts = new java.util.HashMap[String, String](r.options)

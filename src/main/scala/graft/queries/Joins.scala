@@ -20,11 +20,6 @@ import graft.Tables
   */
 object Joins extends QueryModule {
 
-  /** q_join_dpp's day-partitioned fact layout, staged once per (JVM,
-    * sfDir) — the fixture-staging cache pattern from SourceQueries. */
-  private val stagedDppDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def queries: Map[String, Q] = Map(
     // DYNAMIC PARTITION PRUNING: the fact table is laid out partitioned by
     // day; the join's dim side carries the selective filter (week = 2), so
@@ -33,24 +28,22 @@ object Joins extends QueryModule {
     // broadcast), and the scan opens ONLY the 7 matching day partitions.
     // At 100 TB this is the difference between scanning the whole fact
     // table and scanning one week; PlanSpec pins the pruning expression.
-    // The partitioned layout is a FIXTURE, staged once per (JVM, sfDir)
-    // like every other staged base (r16 — the q_join_bucketed rule): the
-    // declared operator is the pruned read, not the layout write, and
-    // re-writing 31 day directories per invocation charged the query a
-    // table build no production DPP scan pays. Staging clusters by day
-    // (one shuffle, one file per day directory) so the pruned scan opens
-    // exactly 7 files.
+    // The partitioned layout is a FIXTURE, staged once per fixture key
+    // (graft.sources.Fixtures) like every other staged base (r16 — the
+    // q_join_bucketed rule): the declared operator is the pruned read,
+    // not the layout write, and re-writing 31 day directories per
+    // invocation charged the query a table build no production DPP scan
+    // pays. Staging clusters by day (one shuffle, one file per day
+    // directory) so the pruned scan opens exactly 7 files.
     "q_join_dpp" -> ((s, d) => {
       import org.apache.spark.sql.types.IntegerType
-      val dayDir = stagedDppDir.computeIfAbsent(d, _ => {
-        val tmp = graft.Scratch.dir("graft_dpp_")
+      val dayDir = graft.sources.Fixtures.scratch("dpp", d, "events") { tmp =>
         Tables(s, d, "events")
           .withColumn("day_no", dayofmonth(col("ts")))
           .repartition(col("day_no"))
           .write.mode("overwrite").partitionBy("day_no")
           .parquet(s"$tmp/events_day")
-        s"$tmp/events_day"
-      })
+      } + "/events_day"
       val fact = s.read.parquet(dayDir)
       val dim = s.range(1, 32).select(
         col("id").cast(IntegerType).as("day_no"),

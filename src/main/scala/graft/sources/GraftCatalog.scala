@@ -17,8 +17,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * into SQL-addressed ones:
   *
   * {{{
-  *   spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
-  *   spark.conf.set("spark.sql.catalog.graft.root", "/data/graft")
+  *   // spark-submit --conf spark.sql.catalog.graft=graft.sources.GraftCatalog
+  *   //              --conf spark.sql.catalog.graft.root=/data/graft
   *   spark.sql("CREATE TABLE graft.corpus.docs (doc_id BIGINT, text STRING)")
   *   spark.sql("INSERT INTO graft.corpus.docs SELECT ...")   // manifest commit
   *   spark.sql("SELECT * FROM graft.corpus.docs")            // manifest-scoped

@@ -9,7 +9,9 @@ import graft.{SparkEntry, SparkSuite}
   * value breaks on the second call (BENCH_r09's q_reorg_purge failure).
   * This spec pins the contract for every catalog-staging query that
   * resolves a table directory or clones a per-JVM staged base: two
-  * back-to-back invocations must both succeed and agree on row count. */
+  * back-to-back invocations must both succeed and agree on row count,
+  * and a third from `spark.newSession()` — where no catalog conf of the
+  * first session is visible — must agree too. */
 class BenchIdempotenceSpec extends SparkSuite {
 
   private val doubled = Seq(
@@ -35,7 +37,49 @@ class BenchIdempotenceSpec extends SparkSuite {
     "q_vector_knn_join_asof_partitioned_pq", "q_text_bm25_asof_scoped_sql",
     "q_dedup_semantic_incremental_asof_sql",
     "q_dedup_minhash_incremental_asof_sql",
-    "q_vector_knn_join_asof_filtered")
+    "q_vector_knn_join_asof_filtered",
+    // every other entry that reads a staged fixture (graft.sources.Fixtures):
+    // the second-session leg below needs each one's catalog registered
+    // in a session that did not stage it
+    "q_meta_partitions", "q_text_search_indexed", "q_vector_search",
+    "q_vector_search_sql", "q_vector_search_pq", "q_vector_search_sampled",
+    "q_vector_search_pq_mp", "q_vector_search_recall_pq",
+    "q_vector_search_sql_pq", "q_vector_search_partitioned",
+    "q_meta_indexes", "q_meta_indexes_partitioned",
+    "q_vector_search_partitioned_multi", "q_vector_search_partitioned_pq",
+    "q_vector_search_partitioned_sampled",
+    "q_vector_search_partitioned_global",
+    "q_dedup_minhash_indexed_incremental", "q_corpus_ingest_pipeline",
+    "q_dedup_semantic_partitioned", "q_sample_cluster_partitioned",
+    "q_vector_search_partitioned_recall",
+    "q_vector_search_partitioned_recall_mp", "q_vector_search_join",
+    "q_vector_search_sql_pq_filtered", "q_vector_search_sql_filtered",
+    "q_dedup_semantic_indexed", "q_dedup_semantic_indexed_incremental",
+    "q_dedup_semantic_indexed_incremental_partitioned",
+    "q_vector_search_recall", "q_vector_search_recall_mp",
+    "q_vector_search_filtered", "q_sample_cluster_indexed",
+    "q_vector_search_mp", "q_text_search_sql", "q_search_hybrid_indexed",
+    "q_search_hybrid_asof", "q_text_phrase_search", "q_text_bm25_indexed",
+    "q_text_bm25_sql", "q_text_bm25_sql_scoped", "q_text_bm25_join",
+    "q_text_bm25_join_sql", "q_text_bm25_join_asof_sql",
+    "q_text_bm25_join_partitioned", "q_stream_bm25_join",
+    "q_text_bm25_join_asof", "q_text_bm25_scoped", "q_text_bm25_asof",
+    "q_text_bm25_asof_sql", "q_text_bm25_partitioned",
+    "q_text_search_partitioned", "q_text_dedup_incremental_partitioned",
+    "q_text_search_asof", "q_text_search_asof_sql",
+    "q_text_phrase_search_asof", "q_text_bm25_dv", "q_vector_knn_join",
+    "q_vector_knn_join_pq", "q_vector_knn_join_sql",
+    "q_vector_knn_join_filtered", "q_vector_knn_join_pq_filtered",
+    "q_vector_search_asof", "q_vector_search_asof_sql",
+    "q_vector_search_asof_partitioned",
+    "q_vector_knn_join_asof_partitioned", "q_vector_knn_join_asof",
+    "q_vector_knn_join_asof_sql", "q_vector_knn_join_partitioned",
+    "q_vector_knn_join_partitioned_multi",
+    "q_vector_knn_join_partitioned_all",
+    "q_vector_knn_join_pq_partitioned", "q_vector_knn_join_recall",
+    "q_vector_search_dv", "q_table_history", "q_table_changes",
+    "q_merge_conditional", "q_merge_bounded", "q_merge_dv",
+    "q_merge_evolve", "q_join_dpp")
 
   doubled.foreach { name =>
     test(s"$name survives a second invocation in the same JVM") {
@@ -44,6 +88,11 @@ class BenchIdempotenceSpec extends SparkSuite {
       assert(first > 0, s"$name returned no rows")
       assert(first == second,
         s"$name row count drifted across invocations: $first vs $second")
+      // a long-lived JVM serves many sessions: the fixture the first
+      // session staged must resolve (and agree) from a fresh one
+      val other = SparkEntry.queries(name)(spark.newSession(), sfDir).count()
+      assert(first == other,
+        s"$name row count drifted in a new session: $first vs $other")
     }
   }
 }
