@@ -12,6 +12,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.{StringType, StructType}
 
+import graft.sources.ManifestTable
+
 /** Parser-tier extension (`SparkSessionExtensions.injectParser`) — the last
   * of the four public extension tiers (the others: expressions/functions,
   * optimizer rule, planner strategy — `functions/GraftExtensions`). Adds ONE
@@ -434,13 +436,8 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
     * another connector (which may have its own row-level DELETE path) or
     * does not resolve at all (the delegate produces the proper error). */
   private def resolvesToManifestTable(target: String): Boolean =
-    try {
-      org.apache.spark.sql.SparkSession.active.table(target)
-        .queryExecution.analyzed.collectFirst {
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-            if r.table.isInstanceOf[graft.sources.ManifestTable] => true
-        }.getOrElse(false)
-    } catch { case _: Exception => false }
+    try ManifestTable.find(SparkSession.active, target).isDefined
+    catch { case _: Exception => false }
 
   /** A `(VECTOR SEARCH …)` group INSIDE a larger statement — the
     * composable-relation form. The rewrite finds the balanced
@@ -926,7 +923,6 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
       InsertReplaceWhereCommand(target, cond, query)
     case DeleteStmt(target, where) if where.count(_ == '\'') % 2 == 0 &&
         (try {
-          import graft.sources.ManifestTable
           !ManifestTable.conjuncts(delegate.parseExpression(where))
             .forall(c => ManifestTable.exprFilter(c).isDefined)
         } catch { case _: Exception => false }) &&
@@ -1062,7 +1058,7 @@ case class UpdateManifestCommand(target: String, sets: Seq[(String, String)],
   override val output: Seq[Attribute] = Seq.empty
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val mt = ManifestTarget.of(spark, target, "UPDATE")
+    val mt = ManifestTable.resolve(spark, target, "UPDATE")
     graft.sources.ManifestTable.updateWhere(mt.dir, sets, where)
     Seq.empty
   }
@@ -1079,7 +1075,7 @@ case class InsertReplaceWhereCommand(target: String, cond: String,
   override def run(spark: SparkSession): Seq[Row] = {
     // resolve-first: a non-manifest target must fail in REPLACE WHERE
     // terms, not as a confusing overwrite-capability error
-    ManifestTarget.of(spark, target, "INSERT INTO ... REPLACE WHERE")
+    ManifestTable.resolve(spark, target, "INSERT INTO ... REPLACE WHERE")
     // INSERT is positional: align the query's output to the target's
     // columns by position (a bare VALUES list arrives as col1, col2, …)
     val df = spark.sql(query)
@@ -1102,7 +1098,7 @@ case class DeleteManifestCommand(target: String, where: String)
   override val output: Seq[Attribute] = Seq.empty
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val mt = ManifestTarget.of(spark, target, "DELETE")
+    val mt = ManifestTable.resolve(spark, target, "DELETE")
     graft.sources.ManifestTable.deleteWhereSql(mt.dir, where)
     Seq.empty
   }
@@ -1119,7 +1115,7 @@ case class DescribeHistoryCommand(target: String) extends LeafRunnableCommand {
     AttributeReference("n_rows", LongType, nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val mt = ManifestTarget.of(spark, target, "DESCRIBE HISTORY")
+    val mt = ManifestTable.resolve(spark, target, "DESCRIBE HISTORY")
     import graft.sources.Manifest
     Manifest.snapshotVersions(mt.dir).flatMap { v =>
       Manifest.readSnapshot(mt.dir, v).map(m =>
@@ -1148,7 +1144,7 @@ case class DescribeDetailCommand(target: String) extends LeafRunnableCommand {
     AttributeReference("num_segments", IntegerType, nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val mt = ManifestTarget.of(spark, target, "DESCRIBE DETAIL")
+    val mt = ManifestTable.resolve(spark, target, "DESCRIBE DETAIL")
     import graft.sources.Manifest
     val dir = mt.dir
     val m = Manifest.read(dir).getOrElse(
@@ -1183,7 +1179,7 @@ case class OptimizeManifestCommand(target: String, targetBytes: Long,
 
   override def run(spark: SparkSession): Seq[Row] = {
     require(targetBytes > 0, s"OPTIMIZE: TARGET $targetBytes BYTES is invalid")
-    val mt = ManifestTarget.of(spark, target, "OPTIMIZE")
+    val mt = ManifestTable.resolve(spark, target, "OPTIMIZE")
     val (before, after) =
       graft.sources.ManifestTable.optimize(mt.dir, targetBytes, zorderBy, whereSql)
     Seq(Row(before, after))
@@ -1209,7 +1205,7 @@ case class CopyIntoCommand(target: String, source: String, format: String,
     AttributeReference("files_skipped", LongType, nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val mt = ManifestTarget.of(spark, target, "COPY INTO")
+    val mt = ManifestTable.resolve(spark, target, "COPY INTO")
     val (copied, rows, skipped) = graft.sources.ManifestTable.copyInto(
       spark, mt.dir, source, format, pattern)
     spark.catalog.refreshTable(target)
@@ -1224,7 +1220,7 @@ case class ReorgTableCommand(target: String) extends LeafRunnableCommand {
     AttributeReference("files_rewritten", IntegerType, nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val mt = ManifestTarget.of(spark, target, "REORG TABLE")
+    val mt = ManifestTable.resolve(spark, target, "REORG TABLE")
     val (purged, rewritten) = graft.sources.ManifestTable.reorgPurge(mt.dir)
     Seq(Row(purged, rewritten))
   }
@@ -1242,7 +1238,7 @@ case class RestoreTableCommand(target: String, version: Int)
     AttributeReference("n_rows", LongType, nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val mt = ManifestTarget.of(spark, target, "RESTORE TABLE")
+    val mt = ManifestTable.resolve(spark, target, "RESTORE TABLE")
     val (files, rows) = graft.sources.ManifestTable.restore(mt.dir, version)
     Seq(Row(files, rows))
   }
@@ -1262,7 +1258,7 @@ case class RestoreTimestampCommand(target: String, ts: String)
 
   override def run(spark: SparkSession): Seq[Row] = {
     import graft.sources.Manifest
-    val mt = ManifestTarget.of(spark, target, "RESTORE TABLE")
+    val mt = ManifestTable.resolve(spark, target, "RESTORE TABLE")
     val cutoff = try java.sql.Timestamp.valueOf(ts).getTime
       catch { case _: IllegalArgumentException =>
         throw new IllegalArgumentException(
@@ -1292,7 +1288,7 @@ case class BranchCommand(target: String, branch: String, action: String)
     AttributeReference("version", IntegerType, nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val mt = ManifestTarget.of(spark, target, s"ALTER TABLE ... $action BRANCH")
+    val mt = ManifestTable.resolve(spark, target, s"ALTER TABLE ... $action BRANCH")
     import graft.sources.{Branch, Manifest}
     val v = action match {
       case "create" =>
@@ -1323,7 +1319,7 @@ case class TagCommand(target: String, tag: String, action: String,
     AttributeReference("version", IntegerType, nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val mt = ManifestTarget.of(spark, target, s"ALTER TABLE ... $action TAG")
+    val mt = ManifestTable.resolve(spark, target, s"ALTER TABLE ... $action TAG")
     import graft.sources.Tag
     val v = action match {
       case "create" => Tag.create(mt.dir, tag, version)
@@ -1344,7 +1340,7 @@ case class ShowTagsCommand(target: String) extends LeafRunnableCommand {
 
   override def run(spark: SparkSession): Seq[Row] = {
     import graft.sources.{Manifest, Tag}
-    val mt = ManifestTarget.of(spark, target, "SHOW TAGS")
+    val mt = ManifestTable.resolve(spark, target, "SHOW TAGS")
     Tag.list(mt.dir).map { t =>
       val m = Manifest.read(Tag.tagDir(mt.dir, t))
       Row(t,
@@ -1366,7 +1362,7 @@ case class ShowBranchesCommand(target: String) extends LeafRunnableCommand {
 
   override def run(spark: SparkSession): Seq[Row] = {
     import graft.sources.{Branch, Manifest}
-    val mt = ManifestTarget.of(spark, target, "SHOW BRANCHES")
+    val mt = ManifestTable.resolve(spark, target, "SHOW BRANCHES")
     Branch.list(mt.dir).map { b =>
       val bdir = Branch.branchDir(mt.dir, b)
       val m = Manifest.read(bdir)
@@ -1389,7 +1385,7 @@ case class CloneTableCommand(target: String, source: String,
 
   override def run(spark: SparkSession): Seq[Row] = {
     import org.apache.spark.sql.connector.catalog.Identifier
-    val srcDir = ManifestTarget.of(spark, source, "SHALLOW CLONE").dir
+    val srcDir = ManifestTable.resolve(spark, source, "SHALLOW CLONE").dir
     import graft.sources.Manifest
     val m = version match {
       case Some(v) => Manifest.readSnapshot(srcDir, v).getOrElse(
@@ -1472,7 +1468,7 @@ case class AlterPartitioningCommand(target: String, items: Seq[String])
         s"SET PARTITIONING: cannot parse transform '$other' — identity " +
           "columns, years/months/days/hours(ts) and bucket(n, col) are accepted")
     }.toArray
-    val mt = ManifestTarget.of(spark, target, "ALTER TABLE SET PARTITIONING")
+    val mt = ManifestTable.resolve(spark, target, "ALTER TABLE SET PARTITIONING")
     val schema = spark.table(target).schema
     val (partCols, renders) =
       graft.sources.GraftCatalog.validateTransforms(schema, transforms)
@@ -1493,7 +1489,7 @@ case class CreateTextIndexCommand(target: String, colName: String,
     AttributeReference("n_tokens", org.apache.spark.sql.types.LongType,
       nullable = false)())
   override def run(spark: SparkSession): Seq[Row] = {
-    val mt = ManifestTarget.of(spark, target, "CREATE TEXT INDEX")
+    val mt = ManifestTable.resolve(spark, target, "CREATE TEXT INDEX")
     val (nf, nt) =
       graft.sources.TextIndex.build(spark, mt.dir, colName, byPartition)
     Seq(Row(nf, nt))
@@ -1506,7 +1502,7 @@ case class DropTextIndexCommand(target: String, colName: String)
   extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq.empty
   override def run(spark: SparkSession): Seq[Row] = {
-    val mt = ManifestTarget.of(spark, target, "DROP TEXT INDEX")
+    val mt = ManifestTable.resolve(spark, target, "DROP TEXT INDEX")
     graft.sources.TextIndex.drop(spark, mt.dir, colName)
     Seq.empty
   }
@@ -1531,7 +1527,7 @@ case class CreateVectorIndexCommand(target: String, colName: String,
     AttributeReference("n_clusters", org.apache.spark.sql.types.LongType,
       nullable = false)())
   override def run(spark: SparkSession): Seq[Row] = {
-    val mt = ManifestTarget.of(spark, target, "CREATE VECTOR INDEX")
+    val mt = ManifestTable.resolve(spark, target, "CREATE VECTOR INDEX")
     val (nf, nc) = graft.sources.VectorIndex.build(spark, mt.dir, colName,
       idCol, lists, sample, coarse, byPartition)
     Seq(Row(nf, nc))
@@ -1544,7 +1540,7 @@ case class DropVectorIndexCommand(target: String, colName: String)
   extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq.empty
   override def run(spark: SparkSession): Seq[Row] = {
-    val mt = ManifestTarget.of(spark, target, "DROP VECTOR INDEX")
+    val mt = ManifestTable.resolve(spark, target, "DROP VECTOR INDEX")
     graft.sources.VectorIndex.drop(spark, mt.dir, colName)
     Seq.empty
   }
@@ -1562,7 +1558,7 @@ case class RefreshIndexCommand(kind: String, target: String, colName: String)
     AttributeReference("remapped", org.apache.spark.sql.types.BooleanType,
       nullable = false)())
   override def run(spark: SparkSession): Seq[Row] = {
-    val mt = ManifestTarget.of(spark, target, s"REFRESH ${kind.toUpperCase} INDEX")
+    val mt = ManifestTable.resolve(spark, target, s"REFRESH ${kind.toUpperCase} INDEX")
     val (n, full) = kind match {
       case "text" => graft.sources.TextIndex.refresh(spark, mt.dir, colName)
       case _ => graft.sources.VectorIndex.refresh(spark, mt.dir, colName)
@@ -1984,22 +1980,6 @@ private[plans] object VectorSearchDf {
   }
 }
 
-/** Shared target resolution for the lowered DML/metadata statements: the
-  * named table must analyze to a graft [[graft.sources.ManifestTable]]
-  * relation — only that table carries the atomic snapshot machinery the
-  * commands rely on. Anything else gets the operation's name in a clear
-  * error instead of a silent wrong lowering. */
-private[plans] object ManifestTarget {
-  def of(spark: SparkSession, target: String, op: String): graft.sources.ManifestTable =
-    spark.table(target).queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-        if r.table.isInstanceOf[graft.sources.ManifestTable] =>
-        r.table.asInstanceOf[graft.sources.ManifestTable]
-    }.getOrElse(throw new UnsupportedOperationException(
-      s"$op: $target is not a graft manifest table — this engine lowers " +
-        s"$op only for its own catalog tables"))
-}
-
 /** The name-addressed VACUUM: resolve the catalog table to its manifest
   * directory (with the same only-a-manifest-table guard every lowered
   * statement uses), then run the path-form command's logic verbatim. */
@@ -2011,7 +1991,7 @@ case class VacuumTableCommand(target: String, retainSnapshots: Option[Int],
     AttributeReference("reason", StringType, nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val mt = ManifestTarget.of(spark, target, "VACUUM")
+    val mt = ManifestTable.resolve(spark, target, "VACUUM")
     VacuumManifestCommand(mt.dir.toString, retainSnapshots,
       stagingOlderThanMinutes, dryRun).run(spark)
   }

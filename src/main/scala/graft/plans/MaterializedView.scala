@@ -268,7 +268,7 @@ object MaterializedView {
       versions.map { case (d, v) =>
         d -> (SnapPin(Some(v).filter(_ > 0), None): Pin) }.toMap)
     df.writeTo(target).create()
-    val mvDir = ManifestTarget.of(spark, target, "CREATE MATERIALIZED VIEW").dir
+    val mvDir = graft.sources.ManifestTable.resolve(spark, target, "CREATE MATERIALIZED VIEW").dir
     stamp(mvDir, Map(QueryProp -> b64(query)) ++ sourceProps(versions) ++
       soleSource(analyzed).map(s =>
         SourceDirProp -> s._2.dir.toAbsolutePath.toString) ++
@@ -300,7 +300,7 @@ object MaterializedView {
     * sources, a changed dim, outer joins, or a dir read twice (self-join)
     * fall back to a full recompute — a correctness-first downgrade. */
   def refresh(spark: SparkSession, target: String): (String, Long) = {
-    val mvDir = ManifestTarget.of(spark, target, "REFRESH MATERIALIZED VIEW").dir
+    val mvDir = graft.sources.ManifestTable.resolve(spark, target, "REFRESH MATERIALIZED VIEW").dir
     val props = Manifest.read(mvDir).map(_.props).getOrElse(Map.empty)
     val query = props.get(QueryProp).map(unb64).getOrElse(
       throw new UnsupportedOperationException(

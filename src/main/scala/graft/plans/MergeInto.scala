@@ -280,7 +280,7 @@ case class MergeIntoFullCommand(spec: MergeParse.Spec) extends LeafRunnableComma
   override val output: Seq[Attribute] = Seq.empty
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val mt = ManifestTarget.of(spark, spec.target, "MERGE INTO")
+    val mt = graft.sources.ManifestTable.resolve(spark, spec.target, "MERGE INTO")
     // the source, resolved ONCE: a table name, or a USING (subquery)
     def sourceDf = spec.sourceQuery.map(spark.sql).getOrElse(spark.table(spec.source))
 

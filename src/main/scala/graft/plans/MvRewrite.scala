@@ -84,7 +84,7 @@ object MvRewrite extends Rule[LogicalPlan] {
   /** Register `mvTable` (a `CREATE MATERIALIZED VIEW` product) for
     * transparent rewriting in this JVM's sessions. */
   def register(spark: SparkSession, mvTable: String): Unit = {
-    val mvDir = ManifestTarget.of(spark, mvTable, "MV REWRITE").dir
+    val mvDir = graft.sources.ManifestTable.resolve(spark, mvTable, "MV REWRITE").dir
     val props = Manifest.read(mvDir).map(_.props).getOrElse(Map.empty)
     val query = props.get(MaterializedView.QueryProp)
       .map(MaterializedView.unb64).getOrElse(throw new IllegalArgumentException(

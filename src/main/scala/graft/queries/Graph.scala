@@ -120,9 +120,14 @@ object Graph extends QueryModule {
       for (_ <- 1 to Iters) {
         val cs = scala.collection.mutable.Map.empty[Long, Long]
           .withDefaultValue(0L)
+        // an edge whose src has no nation row carries no rank — the
+        // oracle's inner join on the node drops it; its weight still
+        // counts in its src's out-weight, as in the oracle's `ow`
         edgeRows.foreach { r =>
           val src = r.getLong(0)
-          cs(r.getLong(1)) += pr(src) * r.getLong(2) / outwOf(src)
+          pr.get(src).foreach { p =>
+            cs(r.getLong(1)) += p * r.getLong(2) / outwOf(src)
+          }
         }
         pr = nodeRows.map { nr =>
           val k = nr.getLong(0)

@@ -4,7 +4,6 @@ import java.nio.file.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 import graft.{Scratch, Tables}
 
@@ -90,18 +89,11 @@ object Fixtures {
   }
 
   /** The manifest directory a relation reads, if it is a manifest table. */
-  def dir(p: LogicalPlan): Option[Path] = p match {
-    case r: DataSourceV2Relation => r.table match {
-      case t: ManifestTable => Some(t.dir)
-      case _ => None
-    }
-    case _ => None
-  }
+  def dir(p: LogicalPlan): Option[Path] = ManifestTable.of(p).map(_.dir)
 
   /** The manifest directory of catalog table `table`. */
   def dir(s: SparkSession, table: String): Path =
-    s.table(table).queryExecution.analyzed.collectFirst(
-      Function.unlift(dir(_: LogicalPlan))).get
+    ManifestTable.resolve(s, table, "fixture").dir
 
   /** The latest snapshot version of catalog table `table`. */
   def version(s: SparkSession, table: String): Int =

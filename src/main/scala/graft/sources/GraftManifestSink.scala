@@ -1781,6 +1781,31 @@ private[sources] object DeletionVector {
 }
 
 private[graft] object ManifestTable {
+  /** The manifest table a relation reads, if it reads one. */
+  def of(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Option[ManifestTable] = p match {
+    case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
+      r.table match {
+        case t: ManifestTable => Some(t)
+        case _ => None
+      }
+    case _ => None
+  }
+
+  /** The manifest table catalog table `table` analyzes to, if any. */
+  def find(spark: org.apache.spark.sql.SparkSession,
+      table: String): Option[ManifestTable] =
+    spark.table(table).queryExecution.analyzed.collectFirst(
+      Function.unlift(of))
+
+  /** [[find]], or a refusal naming the operation: only this engine's
+    * manifest tables carry the snapshot and index machinery `op` needs. */
+  def resolve(spark: org.apache.spark.sql.SparkSession, table: String,
+      op: String): ManifestTable =
+    find(spark, table).getOrElse(throw new UnsupportedOperationException(
+      s"$op: $table is not a graft manifest table — $op runs only on " +
+        "this engine's catalog tables"))
+
   /** AUTOMATIC RETRY on optimistic conflict (the Delta/Iceberg commit
     * loop): a row-level operation that loses the publish race recomputes
     * against the FRESH snapshot and tries again — `body` must be the

@@ -529,15 +529,6 @@ object TextIndex {
       }
     }.toOption.flatten
 
-  private def resolveManifestTable(spark: SparkSession,
-      table: String, op: String): ManifestTable =
-    spark.table(table).queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-        if r.table.isInstanceOf[ManifestTable] =>
-        r.table.asInstanceOf[ManifestTable]
-    }.getOrElse(throw new UnsupportedOperationException(
-      s"$op: $table is not a graft manifest table"))
-
   /** Apply the stale-index query policy (`spark.graft.index.onStale`)
     * when a PUBLISHED text index on `colName` is stale: `refresh`
     * catches it up first (bounded — dead postings drop, only new files
@@ -571,7 +562,7 @@ object TextIndex {
     * exact predicate re-applied scan-side); full scan otherwise. */
   def search(spark: SparkSession, table: String, colName: String,
       term: String): DataFrame = {
-    val mt = resolveManifestTable(spark, table, "TEXT SEARCH")
+    val mt = ManifestTable.resolve(spark, table, "TEXT SEARCH")
     applyStalePolicy(spark, mt.dir, colName, "TEXT SEARCH")
     val pred = array_contains(split(col(colName), " "), term)
     candidateFiles(spark, mt.dir, colName, term) match {
@@ -593,7 +584,7 @@ object TextIndex {
     * wrong. */
   def searchWhere(spark: SparkSession, table: String, colName: String,
       term: String, scope: org.apache.spark.sql.Column): DataFrame = {
-    val mt = resolveManifestTable(spark, table, "TEXT SEARCH")
+    val mt = ManifestTable.resolve(spark, table, "TEXT SEARCH")
     applyStalePolicy(spark, mt.dir, colName, "TEXT SEARCH")
     val pred = array_contains(split(col(colName), " "), term) && scope
     val m = Manifest.read(mt.dir).getOrElse(
@@ -629,7 +620,7 @@ object TextIndex {
     * snapshot-pinned full scan — the same answer, no pruning. */
   def searchAsOf(spark: SparkSession, table: String, colName: String,
       term: String, version: Int): DataFrame = {
-    val mt = resolveManifestTable(spark, table, "TEXT SEARCH AS OF")
+    val mt = ManifestTable.resolve(spark, table, "TEXT SEARCH AS OF")
     val pred = array_contains(split(col(colName), " "), term)
     asOfCandidates(spark, mt.dir, colName, version,
       posts => posts.where(col("token") === term)) match {
@@ -647,7 +638,7 @@ object TextIndex {
     * scan, same answer. */
   def phraseSearchAsOf(spark: SparkSession, table: String, colName: String,
       phrase: String, version: Int): DataFrame = {
-    val mt = resolveManifestTable(spark, table, "PHRASE SEARCH AS OF")
+    val mt = ManifestTable.resolve(spark, table, "PHRASE SEARCH AS OF")
     val tokens = phrase.split(" ").filter(_.nonEmpty).toSeq
     require(tokens.nonEmpty, "PHRASE SEARCH AS OF: empty phrase")
     val pred = concat(lit(" "), col(colName), lit(" "))
@@ -728,7 +719,7 @@ object TextIndex {
       idCol: String, batch: DataFrame): DataFrame = {
     import graft.llm.Dedup
     val op = "MINHASH DEDUP INCREMENTAL"
-    val mt = resolveManifestTable(spark, table, op)
+    val mt = ManifestTable.resolve(spark, table, op)
     if (!Manifest.read(mt.dir).exists(_.props.keys
         .exists(_.equalsIgnoreCase(PropPrefix + colName))))
       throw new IllegalStateException(
@@ -853,7 +844,7 @@ object TextIndex {
       version: Int): DataFrame = {
     import graft.llm.Dedup
     val op = "MINHASH DEDUP INCREMENTAL AS OF"
-    val mt = resolveManifestTable(spark, table, op)
+    val mt = ManifestTable.resolve(spark, table, op)
     val m = Manifest.readSnapshot(mt.dir, version).getOrElse(
       throw new IllegalArgumentException(
         s"$op: snapshot $version expired or never existed at ${mt.dir}"))
@@ -973,7 +964,7 @@ object TextIndex {
     * with the same predicate. */
   def phraseSearch(spark: SparkSession, table: String, colName: String,
       phrase: String): DataFrame = {
-    val mt = resolveManifestTable(spark, table, "PHRASE SEARCH")
+    val mt = ManifestTable.resolve(spark, table, "PHRASE SEARCH")
     applyStalePolicy(spark, mt.dir, colName, "PHRASE SEARCH")
     val tokens = phrase.split(" ").filter(_.nonEmpty).toSeq
     require(tokens.nonEmpty, "PHRASE SEARCH: empty phrase")
@@ -1020,7 +1011,7 @@ object TextIndex {
     * floor). */
   def bm25TopK(spark: SparkSession, table: String, colName: String,
       idCol: String, terms: Seq[String], k: Int): DataFrame = {
-    val mt = resolveManifestTable(spark, table, "BM25 SEARCH")
+    val mt = ManifestTable.resolve(spark, table, "BM25 SEARCH")
     applyStalePolicy(spark, mt.dir, colName, "BM25 SEARCH")
     val m = Manifest.read(mt.dir).getOrElse(
       throw new IllegalStateException(s"BM25 SEARCH: no manifest at ${mt.dir}"))
@@ -1092,7 +1083,7 @@ object TextIndex {
   def bm25Join(spark: SparkSession, table: String, colName: String,
       idCol: String, batch: DataFrame, qidCol: String, qtextCol: String,
       k: Int): DataFrame = {
-    val mt = resolveManifestTable(spark, table, "BM25 JOIN")
+    val mt = ManifestTable.resolve(spark, table, "BM25 JOIN")
     applyStalePolicy(spark, mt.dir, colName, "BM25 JOIN")
     val m = Manifest.read(mt.dir).getOrElse(
       throw new IllegalStateException(s"BM25 JOIN: no manifest at ${mt.dir}"))
@@ -1113,7 +1104,7 @@ object TextIndex {
   def bm25JoinAsOf(spark: SparkSession, table: String, colName: String,
       idCol: String, batch: DataFrame, qidCol: String, qtextCol: String,
       k: Int, version: Int): DataFrame = {
-    val mt = resolveManifestTable(spark, table, "BM25 JOIN AS OF")
+    val mt = ManifestTable.resolve(spark, table, "BM25 JOIN AS OF")
     val m = Manifest.readSnapshot(mt.dir, version).getOrElse(
       throw new IllegalArgumentException(
         s"BM25 JOIN AS OF: snapshot $version expired or never existed " +
@@ -1482,7 +1473,7 @@ object TextIndex {
   def bm25TopKScoped(spark: SparkSession, table: String, colName: String,
       idCol: String, terms: Seq[String], k: Int,
       scope: org.apache.spark.sql.Column): DataFrame = {
-    val mt = resolveManifestTable(spark, table, "BM25 SEARCH")
+    val mt = ManifestTable.resolve(spark, table, "BM25 SEARCH")
     applyStalePolicy(spark, mt.dir, colName, "BM25 SEARCH")
     val m = Manifest.read(mt.dir).getOrElse(
       throw new IllegalStateException(s"BM25 SEARCH: no manifest at ${mt.dir}"))
@@ -1580,7 +1571,7 @@ object TextIndex {
     * at that version would answer — no index required at all). */
   def bm25TopKAsOf(spark: SparkSession, table: String, colName: String,
       idCol: String, terms: Seq[String], k: Int, version: Int): DataFrame = {
-    val mt = resolveManifestTable(spark, table, "BM25 SEARCH AS OF")
+    val mt = ManifestTable.resolve(spark, table, "BM25 SEARCH AS OF")
     val m = Manifest.readSnapshot(mt.dir, version).getOrElse(
       throw new IllegalArgumentException(
         s"BM25 SEARCH AS OF: snapshot $version expired or never existed " +
@@ -1651,7 +1642,7 @@ object TextIndex {
   def bm25TopKScopedAsOf(spark: SparkSession, table: String,
       colName: String, idCol: String, terms: Seq[String], k: Int,
       scope: org.apache.spark.sql.Column, version: Int): DataFrame = {
-    val mt = resolveManifestTable(spark, table, "BM25 SEARCH AS OF")
+    val mt = ManifestTable.resolve(spark, table, "BM25 SEARCH AS OF")
     val m = Manifest.readSnapshot(mt.dir, version).getOrElse(
       throw new IllegalArgumentException(
         s"BM25 SEARCH AS OF: snapshot $version expired or never existed " +

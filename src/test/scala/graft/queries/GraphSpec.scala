@@ -59,4 +59,34 @@ class GraphSpec extends SparkSuite {
     val base = (15L * (1000000000000L / 25L)) / 100L
     rows.foreach(r => assert(r.getAs[Long]("pr_fp") >= base))
   }
+
+  test("pagerank: an edge whose customer nation has no nation row is " +
+      "dropped, as the oracle's inner join drops it") {
+    val dir = java.nio.file.Files.createTempDirectory("pr_orphan_").toString
+    Seq("lineitem", "orders", "customer", "supplier").foreach { n =>
+      spark.read.parquet(s"$sfDir/$n.parquet").write.parquet(s"$dir/$n.parquet")
+    }
+    // a nation that some order's customer belongs to: its edges lose
+    // their src node once its row is gone
+    val orphan = spark.read.parquet(s"$sfDir/customer.parquet")
+      .join(spark.read.parquet(s"$sfDir/orders.parquet"),
+        col("c_custkey") === col("o_custkey"))
+      .select(col("c_nationkey").cast("long")).head().getLong(0)
+    spark.read.parquet(s"$sfDir/nation.parquet")
+      .where(col("n_nationkey") =!= orphan)
+      .write.parquet(s"$dir/nation.parquet")
+    val got = Graph.queries("q_graph_pagerank")(spark, dir).collect()
+      .map(r => (r.getAs[String]("n_name"), r.getAs[Long]("pr_fp"),
+        r.getAs[Int]("rank"))).toSeq
+    // the oracle SQL, in Spark's integer-division spelling, over the
+    // same five tables in a private session
+    val s2 = spark.newSession()
+    Seq("lineitem", "orders", "customer", "supplier", "nation").foreach(n =>
+      s2.read.parquet(s"$dir/$n.parquet").createOrReplaceTempView(n))
+    val want = s2.sql(Graph.oracles("q_graph_pagerank").replace("//", " div "))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSeq
+    assert(got.size == 24, s"every remaining nation ranks: $got")
+    assert(got == want, s"engine $got vs oracle $want")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
 }

@@ -1643,4 +1643,108 @@ class VectorIndexSpec extends SparkSuite {
     assert(e2.getMessage.contains("VECTOR SEARCH ON <table>"),
       s"got: ${e2.getMessage}")
   }
+
+  test("AS OF the head version answers exactly what the current serve " +
+      "does: flat and BY PARTITION, exact and PQ") {
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      df.collect().map(_.toSeq).toSeq
+    def same(what: String, asOf: org.apache.spark.sql.DataFrame,
+        cur: org.apache.spark.sql.DataFrame): Unit = {
+      val (a, c) = (rows(asOf), rows(cur))
+      assert(c.nonEmpty, s"$what: the current serve answers something")
+      assert(a == c, s"$what: AS OF head $a vs current $c")
+    }
+    val probe = vec(0, (10, 0.05f))
+    val batch = Seq((500L, 0, vec(0, (10, 0.05f))),
+        (501L, 1, vec(1, (20, 0.04f))), (502L, 0, vec(2)))
+      .toDF("vec_id", "label", "embedding")
+    def check(t: String, pred: org.apache.spark.sql.Column): Unit = {
+      val v = Fixtures.version(spark, t)
+      val asOf = VectorIndex.searchAsOf(spark, t, "embedding", probe, 6, v)
+      val cur = VectorIndex.search(spark, t, "embedding", probe, 6)
+      same("search", asOf, cur)
+      assert(plannedFiles(asOf) == plannedFiles(cur),
+        "the snapshot's own posting lists prune like the current ones")
+      same("searchWhere",
+        VectorIndex.searchAsOfWhere(spark, t, "embedding", probe, 6, v, 1,
+          pred),
+        VectorIndex.searchWhere(spark, t, "embedding", probe, 6, 1, pred))
+      same("searchPq",
+        VectorIndex.searchAsOfPq(spark, t, "embedding", probe, 6, v, 1, 8,
+          Some(pred)),
+        VectorIndex.searchPqWhere(spark, t, "embedding", probe, 6, 1, 8,
+          pred))
+      same("knnJoin",
+        VectorIndex.knnJoinAsOf(spark, t, "embedding", batch, 4, v,
+          Some(pred)),
+        VectorIndex.knnJoinWhere(spark, t, "embedding", batch, 4, pred))
+      same("knnJoinPq",
+        VectorIndex.knnJoinAsOfPq(spark, t, "embedding", batch, 4, v, 8),
+        VectorIndex.knnJoinPq(spark, t, "embedding", batch, 4, 8))
+      same("semDedupIncremental",
+        VectorIndex.semDedupIncrementalAsOf(spark, t, "embedding", batch, v),
+        VectorIndex.semDedupIncremental(spark, t, "embedding", batch))
+    }
+    val flat = stage(freshCatalog("vixhd"))
+    spark.sql(s"CREATE VECTOR INDEX ON $flat (embedding) ANCHORS (vec_id)")
+    check(flat, col("vec_id") % 2 === 0)
+    val cat = freshCatalog("vixhp")
+    val parted = s"$cat.ns.emb"
+    spark.sql(s"CREATE TABLE $parted (vec_id BIGINT, label INT, " +
+      "embedding ARRAY<FLOAT>) PARTITIONED BY (label)")
+    (0L to 5L).map(i => (i, 0, vec(0, (10, 0.05f))))
+      .toDF("vec_id", "label", "embedding").coalesce(1).writeTo(parted)
+      .append()
+    (6L to 11L).map(i => (i, 1, vec(1, (20, 0.05f))))
+      .toDF("vec_id", "label", "embedding").coalesce(1).writeTo(parted)
+      .append()
+    spark.sql(s"CREATE VECTOR INDEX ON $parted (embedding) ANCHORS (vec_id) " +
+      "BY PARTITION")
+    check(parted, col("label") === 0)
+  }
+
+  test("a digest-fresh index missing its PQ or band sidecars refuses at " +
+      "the current version; AS OF its version replays the same rows") {
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      df.collect().map(_.toSeq).toSeq
+    def delete(p: java.nio.file.Path): Unit = {
+      import scala.jdk.CollectionConverters._
+      val walk = Files.walk(p)
+      try walk.iterator().asScala.toSeq.reverse.foreach(Files.delete)
+      finally walk.close()
+    }
+    val t = stage(freshCatalog("vixrf"))
+    spark.sql(s"CREATE VECTOR INDEX ON $t (embedding) ANCHORS (vec_id)")
+    val dir = Fixtures.dir(spark, t)
+    val v = Fixtures.version(spark, t)
+    val idxDir = dir.resolve(VectorIndex.parseProp(
+      Manifest.read(dir).get.props("vecidx.embedding")).idxName)
+    val probe = vec(0, (10, 0.05f))
+    val batch = Seq((100L, vec(0, (11, 0.04f))), (101L, vec(1, (21, 0.04f))),
+      (102L, vec(2))).toDF("vec_id", "embedding")
+    def pqAsOf() = rows(
+      VectorIndex.searchAsOfPq(spark, t, "embedding", probe, 6, v, 1, 8))
+    def dedupAsOf() = rows(
+      VectorIndex.semDedupIncrementalAsOf(spark, t, "embedding", batch, v))
+    val (pqServed, dedupServed) = (pqAsOf(), dedupAsOf())
+    assert(pqServed.size == 6 && dedupServed.size == 3)
+    delete(idxDir.resolve("pqcb"))
+    val e1 = intercept[IllegalStateException] {
+      VectorIndex.searchPq(spark, t, "embedding", probe, 6).collect()
+    }
+    assert(e1.getMessage.contains("no PQ codebook"), e1.getMessage)
+    val e2 = intercept[IllegalStateException] {
+      VectorIndex.knnJoinPq(spark, t, "embedding", batch, 3).collect()
+    }
+    assert(e2.getMessage.contains("no PQ codebook"), e2.getMessage)
+    assert(pqAsOf() == pqServed, "the snapshot replays the served PQ rows")
+    delete(idxDir.resolve("lshanch"))
+    val e3 = intercept[IllegalStateException] {
+      VectorIndex.semDedupIncremental(spark, t, "embedding", batch).collect()
+    }
+    assert(e3.getMessage.contains("predates the band sidecars"),
+      e3.getMessage)
+    assert(dedupAsOf() == dedupServed,
+      "the snapshot replays the served dedup verdicts")
+  }
 }
